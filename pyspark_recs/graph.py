@@ -20,56 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def orient_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Canonical (lo, hi) id-orientation with self-loop and duplicate
-    removal — each undirected edge survives exactly once."""
-    lo = F.least(F.col(src), F.col(dst))
-    hi = F.greatest(F.col(src), F.col(dst))
-    return (
-        edges.filter(F.col(src) != F.col(dst))
-        .select(lo.alias("lo"), hi.alias("hi"))
-        .distinct()
-    )
-
-
-def orient_edges_by_degree(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Degree orientation: direct each undirected edge from its
-    lower-degree endpoint to its higher-degree one (ties by id). This
-    bounds every node's OUT-degree by O(√m) on any graph (a node of
-    degree d > √m only points at nodes of degree ≥ d, and there are
-    < 2√m of those), which caps the wedge join at O(m^1.5) total —
-    the difference between 'hub nodes square the join' and 'it
-    scales'. The degree table is node-sized and broadcast."""
-    return _degree_orient(orient_edges(edges, src, dst))
-
-
-def _degree_orient(e: DataFrame) -> DataFrame:
-    """Degree-orient an ALREADY canonical (lo, hi) distinct edge list.
-
-    Degree is one explode pass over the edge list (each edge credits
-    both endpoints once — identical counts to the union-of-two-selects
-    formulation, one scan instead of two), then the orientation flips
-    each edge toward its higher-(deg, id) endpoint via two broadcast
-    joins on the node-sized degree table."""
-    deg = (
-        e.select(F.explode(F.array("lo", "hi")).alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    dl = F.broadcast(deg.selectExpr("node AS lo", "deg AS deg_lo"))
-    dh = F.broadcast(deg.selectExpr("node AS hi", "deg AS deg_hi"))
-    with_deg = e.join(dl, "lo").join(dh, "hi")
-    lo_first = (F.col("deg_lo") < F.col("deg_hi")) | (
-        (F.col("deg_lo") == F.col("deg_hi")) & (F.col("lo") < F.col("hi"))
-    )
-    return with_deg.select(
-        F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
-        F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("v"),
-    )
-
-
 def pagerank(
     edges: DataFrame,
     iterations: int = 3,
@@ -172,14 +122,7 @@ def pagerank(
                 prev.unpersist()
             prev = ranks
     # nodes/the last materialized round stay cached for the caller's
-    # action on the returned (lazy) ranks — register them so session
-    # teardown releases them (the r89 lint class). e is a snapshot_plan
-    # (self-registered).
-    from pyspark_recs.workloads.common import register_persisted
-
-    register_persisted(nodes)
-    if prev is not None:
-        register_persisted(prev)
+    # action on the returned (lazy) ranks.
     return ranks
 
 
@@ -247,14 +190,9 @@ def personalized_pagerank(
     # user-item pairs). For frontiers past the broadcast budget (huge seed sets,
     # many hops on a connected graph), drop the hint and pre-bucket the
     # edge table on src instead.
-    from pyspark_recs.workloads.common import register_persisted
-
-    # Both caches feed every hop of the returned lazy plan — registered
-    # so session teardown releases them (the r89 lint class).
-    e_deg = register_persisted(e.join(deg, "src").cache())
-    s = register_persisted(
-        seeds.select(F.col(seeds.columns[0]).alias("node")).distinct().cache()
-    )
+    # Both caches feed every hop of the returned lazy plan.
+    e_deg = e.join(deg, "src").cache()
+    s = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct().cache()
     n_seeds = s.count()
     inv_s = 1.0 / float(n_seeds)
     teleport_val = (1.0 - damping) * inv_s
@@ -415,7 +353,7 @@ def triangle_counts(
     materialized separately — the probe stream is the adjacency table
     re-exploded (carrying its own ``nu`` for free), and only the
     ``nv`` lookup needs a join. The adjacency table is SNAPSHOT once
-    per run (eager localCheckpoint, teardown-registered, invisible to
+    per run (eager localCheckpoint, invisible to
     the CacheManager so every run honestly recomputes — the round-13
     fix for rs11's cache-accounting bench number, VERDICT r12 #1).
 

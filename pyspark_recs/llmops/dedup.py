@@ -423,14 +423,6 @@ def connected_components(
             "a component has diameter > max_iter and would be silently "
             "split — raise max_iter"
         )
-    # The returned labels stay cached for the caller, so they must be
-    # released at session teardown like every internally-persisted
-    # intermediate — otherwise each CC fit leaks one cached frame for
-    # the session's lifetime (the r89 leak class the registry-wide
-    # cache lint checks for).
-    from pyspark_recs.workloads.common import register_persisted
-
-    register_persisted(labels)
     return labels
 
 
@@ -746,11 +738,8 @@ def duplicate_text_spans(
         F.col(id_col), words.alias("words"), F.size(words).alias("n_tokens")
     )
     # One tokenization feeds grams AND the base counts; gram table
-    # feeds the dup-gram fit AND the position probe. Both registered
-    # so session teardown releases them (the r89 lint class).
-    from pyspark_recs.workloads.common import register_persisted
-
-    toks = register_persisted(toks.cache())
+    # feeds the dup-gram fit AND the position probe. Both cached.
+    toks = toks.cache()
     grams = (
         toks.filter(F.col("n_tokens") >= k)
         .select(
@@ -767,7 +756,7 @@ def duplicate_text_spans(
             id_col, "n_tokens", "pos", md5_long(F.col("gram")).alias("gh")
         )
     )
-    grams = register_persisted(grams.cache())
+    grams = grams.cache()
     dup_grams = (
         grams.groupBy("gh")
         .agg(F.count_distinct(F.col(id_col)).alias("nd"))

@@ -412,12 +412,8 @@ def heavy_hitters(
         F.spark_partition_id().alias("pid"),
     )
     # The returned plan reads toks three times (local counts, partition
-    # sizes, exact recount) — cached, and REGISTERED so session
-    # teardown releases it (the cache must outlive this call; the r89
-    # lint class).
-    from pyspark_recs.workloads.common import register_persisted
-
-    toks = register_persisted(toks.cache())
+    # sizes, exact recount) — cached; the cache must outlive this call.
+    toks = toks.cache()
     total = toks.count()  # N: one job, also materializes the cache
     # Phase 1: per-partition counts and local threshold. A token with
     # global count > N/k must exceed N_p/k in ≥1 partition p (else
@@ -470,11 +466,8 @@ def rare_token_score(
     broadcast. Two shuffles total (unigram agg, per-doc re-agg).
     """
     toks = df.select("doc_id", F.explode(tokens(F.col(text_col))).alias("token"))
-    # Consumed twice (unigram agg + scoring join) — cached and
-    # registered for session teardown, as in heavy_hitters above.
-    from pyspark_recs.workloads.common import register_persisted
-
-    toks = register_persisted(toks.cache())
+    # Consumed twice (unigram agg + scoring join) — cached.
+    toks = toks.cache()
     unigrams = toks.groupBy("token").agg(F.count("*").alias("tok_cnt"))
     total = toks.count()
     scored = (
@@ -878,10 +871,8 @@ def bigram_lm_score(
         .groupBy("doc_id", "bigram")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    # fit + score read it once each — registered for session teardown
-    from pyspark_recs.workloads.common import register_persisted
-
-    dbc = register_persisted(dbc.cache())
+    # fit + score read it once each
+    dbc = dbc.cache()
     big = (
         dbc.groupBy("bigram")
         .agg(F.sum("cnt").alias("c12"))
@@ -954,11 +945,8 @@ def dsir_importance(
         "_t",
         (md5_long(F.col("token")) % n_buckets).alias("bucket"),
     )
-    # raw counts, target counts, doc multisets — registered for
-    # session teardown
-    from pyspark_recs.workloads.common import register_persisted
-
-    tb = register_persisted(tb.cache())
+    # raw counts, target counts, doc multisets all read it
+    tb = tb.cache()
     raw = tb.groupBy("bucket").agg(F.count(F.lit(1)).alias("cr"))
     tgt = (
         tb.filter(F.col("_t") == target_value)

@@ -73,27 +73,11 @@ def train_als(
     # input: callers today pass (user,item)-aggregated frames, but the
     # API is general and duplicate (user,item) rows with different
     # ratings would otherwise make the layout input-order-dependent.
-    # MLlib keeps the fitted factor RDDs ("userFactors"/"itemFactors")
-    # persisted with no DataFrame to unpersist — register an RDD-level
-    # handle scoped to the ids this fit created, so session teardown
-    # (unpersist_shared) releases them (the r89 cache-lint class).
-    from pyspark_recs.workloads.common import (
-        PersistedRddHandle,
-        persisted_ids,
-        register_persisted,
-    )
-
-    spark = ratings.sparkSession
-    pre = persisted_ids(spark)
-    model = als.fit(
+    return als.fit(
         ratings.repartition(n, user_col, item_col).sortWithinPartitions(
             user_col, item_col, rating_col
         )
     )
-    register_persisted(
-        PersistedRddHandle(spark, persisted_ids(spark) - pre)
-    )
-    return model
 
 
 def recommend_topk(model, users: DataFrame, k: int = 10) -> DataFrame:

@@ -307,13 +307,6 @@ def ranked_by_range(
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )
-    # Register the persisted intermediate for session teardown —
-    # unpersist_shared releases it alongside the shared plans, so
-    # repeated Categorify fits in a long-lived session don't grow
-    # cached storage monotonically.
-    from pyspark_recs.workloads.common import register_persisted
-
-    register_persisted(ranged)
     w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = (
         ranged.groupBy("_pid")
@@ -350,7 +343,7 @@ def ntile_by_range(
     first ``n mod k`` buckets hold ``n div k + 1`` rows, the rest
     ``n div k``. ``total`` is the row count (a bounded driver scalar);
     pass it when the caller already knows it, else the frame is
-    persisted (and registered for teardown) and counted here.
+    persisted and counted here.
 
     .. warning:: ``total`` is TRUSTED. A wrong value silently yields
        wrong buckets — there is no detection path, because the bucket
@@ -365,10 +358,7 @@ def ntile_by_range(
     (per-entity rollups), never a raw fact table.
     """
     if total is None:
-        from pyspark_recs.workloads.common import register_persisted
-
         df = df.persist()
-        register_persisted(df)
         total = df.count()
     base, rem = divmod(total, n_buckets)
     cut = rem * (base + 1)
@@ -766,7 +756,7 @@ def _order_bucketed(
     This round's fix (guide §3.3 "materialise the intermediate", §2.4
     "share one exchange"): range-partition, stamp ``_pid``, and
     SNAPSHOT the result once (``workloads.common.snapshot_plan`` —
-    eager localCheckpoint, teardown-registered). The materialization
+    eager localCheckpoint). The materialization
     freezes the pid assignment, so both consumer branches read the
     same bucketing by construction — resampling can never diverge —
     and the upstream executes exactly once (inside the range

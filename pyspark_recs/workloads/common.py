@@ -85,6 +85,8 @@ def sql_davg(expr: str, scale: int = 6) -> str:
 # construction — the builder is the same plan the query used to inline —
 # and the memo key includes applicationId so a new session (the driver's
 # vanilla SparkSession, a fresh bench run) rebuilds from scratch.
+# ``unpersist_shared`` frees the entries together with everything else
+# the session persisted.
 #
 # At 100 TB this is the standard "materialize the shared feature table
 # once per pipeline run" discipline: every entry cached here is an
@@ -332,53 +334,16 @@ def artifact_plan(spark, sf: str, key: str, version: str, builder):
     return shared_plan(spark, sf, stem, load_or_build)
 
 
-def register_persisted(df, sf: str = "", key: str | None = None):
-    """Track a frame an operator persisted internally (e.g.
-    ``ranked_by_range``'s range-partitioned intermediate) so
-    ``unpersist_shared`` can release it at teardown — otherwise every
-    such call leaks a cached DataFrame for the session's lifetime."""
-    ck = (
-        df.sparkSession.sparkContext.applicationId,
-        sf,
-        key or f"__persisted_{id(df)}",
-    )
-    with _REGISTRY_LOCK:
-        _SHARED.setdefault(ck, df)
-    return df
-
-
-def persistent_rdd_snapshot(spark) -> list:
-    """(id, description) of every RDD the JVM currently holds
-    persisted — the mechanical ground truth behind the registry-wide
-    cache-teardown lint (tools/cache_lint.py): after a query runs and
-    ``unpersist_shared`` fires, this list must be EMPTY, or the query
-    persisted something it never registered (the r89 leak class, which
-    round 9 caught only by review)."""
-    out = []
+def _persistent_rdds(spark):
+    """Yield ``(id, JavaRDD)`` for every RDD the JVM currently holds
+    persisted."""
     it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
     while it.hasNext():
         t = it.next()
-        rdd = t._2()
-        name = rdd.name()
-        out.append((int(t._1()), (name or rdd.toString())[:120]))
-    return out
+        yield int(t._1()), t._2()
 
 
-def release_persisted_ids(spark, ids) -> int:
-    """Unpersist the persisted RDDs with exactly these ids. Used by
-    iterative operators to drop SUPERSEDED localCheckpoint rounds while
-    the live one keeps serving, and by :class:`PersistedRddHandle` for
-    RDD-level storage (MLlib factor RDDs, final checkpoints) that
-    ``DataFrame.unpersist`` cannot reach."""
-    ids = set(ids)
-    if not ids:
-        return 0
-    rdds = []
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        t = it.next()
-        if int(t._1()) in ids:
-            rdds.append(t._2())
+def _unpersist_rdds(rdds: list) -> int:
     for r in rdds:
         try:
             r.unpersist(False)
@@ -387,28 +352,33 @@ def release_persisted_ids(spark, ids) -> int:
     return len(rdds)
 
 
-class PersistedRddHandle:
-    """Duck-typed registree for :func:`register_persisted` when the
-    persisted storage is an RDD rather than a CacheManager entry —
-    MLlib keeps ALS factor RDDs and BinaryClassificationMetrics
-    intermediates persisted with no DataFrame to unpersist, and a
-    plan-serving ``localCheckpoint`` can only be dropped at the RDD
-    level. ``unpersist()`` (what ``unpersist_shared`` calls at
-    teardown) force-releases the captured ids."""
+def persistent_rdd_snapshot(spark) -> list:
+    """(id, description) of every RDD the JVM currently holds
+    persisted — the mechanical ground truth behind the registry-wide
+    cache-teardown lint (tools/cache_lint.py): after a query runs and
+    ``unpersist_shared`` fires, this list must be EMPTY."""
+    return [
+        (i, (r.name() or r.toString())[:120])
+        for i, r in _persistent_rdds(spark)
+    ]
 
-    def __init__(self, spark, ids):
-        self.sparkSession = spark
-        self._ids = set(ids)
 
-    def unpersist(self):
-        release_persisted_ids(self.sparkSession, self._ids)
+def release_persisted_ids(spark, ids) -> int:
+    """Unpersist the persisted RDDs with exactly these ids. Used by
+    iterative operators to drop SUPERSEDED localCheckpoint rounds while
+    the live one keeps serving, and to drop checkpoints nothing
+    references any more, before session teardown."""
+    ids = set(ids)
+    if not ids:
+        return 0
+    return _unpersist_rdds([r for i, r in _persistent_rdds(spark) if i in ids])
 
 
 def persisted_ids(spark) -> set:
     """Just the id set of :func:`persistent_rdd_snapshot` — the
     snapshot-diff primitive operators use to scope RDD-level releases
     to storage THEY created."""
-    return {i for i, _ in persistent_rdd_snapshot(spark)}
+    return {i for i, _ in _persistent_rdds(spark)}
 
 
 _SNAPSHOT_SEQ = _itertools.count()
@@ -416,9 +386,7 @@ _SNAPSHOT_SEQ = _itertools.count()
 
 def snapshot_plan(df):
     """Materialize a multiply-consumed intermediate ONCE via
-    ``localCheckpoint(eager=True)`` and register the created RDD blocks
-    for session teardown (``unpersist_shared`` → ``PersistedRddHandle``),
-    so the snapshot cannot leak past the cache lint.
+    ``localCheckpoint(eager=True)``.
 
     This is the optimization-guide §3.3 move ("materialising an
     intermediate result truncates the plan") applied to helpers whose
@@ -454,15 +422,7 @@ def snapshot_plan(df):
         )
         df.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
-    before = persisted_ids(spark)
-    snap = df.localCheckpoint(eager=True)
-    created = persisted_ids(spark) - before
-    if created:
-        register_persisted(
-            PersistedRddHandle(spark, created),
-            key=f"__snapshot_{next(_SNAPSHOT_SEQ)}",
-        )
-    return snap
+    return df.localCheckpoint(eager=True)
 
 
 _SNAPSHOT_SCRATCH: list = []
@@ -487,74 +447,39 @@ def _snapshot_scratch_root() -> str:
     return _SNAPSHOT_SCRATCH[0]
 
 
-def release_local_checkpoints(spark, before_ids=None) -> int:
-    """Unpersist every ``localCheckpoint``-created RDD not present in
-    ``before_ids`` — either a :func:`persistent_rdd_snapshot` list of
-    ``(id, description)`` tuples or a plain set of RDD ids (both
-    shapes accepted; ADVICE r11 fixed the tuple-only unpack).
-    localCheckpoint blocks are NOT recomputable — only call this when
-    nothing live references them anymore (e.g. the result was
-    collected into a literal frame, rs35's shape). The id-diff guard
-    keeps a concurrent operator's live checkpoints untouched."""
-    skip = set()
-    for entry in before_ids or ():
-        skip.add(entry if isinstance(entry, int) else entry[0])
-    rdds = []
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        t = it.next()
-        if int(t._1()) in skip:
-            continue
-        r = t._2()
-        if "localCheckpoint" in (r.toString() or ""):
-            rdds.append(r)
-    for r in rdds:
-        try:
-            r.unpersist(False)
-        except Exception:
-            pass
-    return len(rdds)
-
-
 def release_all_persistent(spark) -> int:
-    """Force-release every persisted RDD + clear the SQL cache manager
-    — the lint's between-queries isolation step (a leak from query A
-    must not be attributed to query B). Returns how many RDDs were
-    force-unpersisted."""
-    rdds = []
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        rdds.append(it.next()._2())
-    for r in rdds:
-        try:
-            r.unpersist(False)
-        except Exception:
-            pass
+    """Force-release every persisted RDD + clear the SQL cache manager.
+    Returns how many RDDs were force-unpersisted."""
+    n = _unpersist_rdds([r for _, r in _persistent_rdds(spark)])
     spark.catalog.clearCache()
-    return len(rdds)
+    return n
 
 
 def unpersist_shared(spark=None) -> int:
-    """Release every cached shared subplan (all sessions, or just
-    ``spark``'s). Wired into bench/oracle teardown so a long-lived
-    session sweeping many SF dirs doesn't grow persisted storage
-    monotonically. Returns the number of entries released."""
-    with _REGISTRY_LOCK:
-        if spark is None:
-            items = list(_SHARED.items())
+    """Session teardown: drop ``spark``'s :func:`shared_plan` memo
+    entries, then free everything the session persisted
+    (:func:`release_all_persistent`) — shared plans, operator-internal
+    caches, MLlib's persisted RDDs and ``localCheckpoint`` blocks
+    alike. Operators therefore persist what they reuse and leave the
+    freeing to this call; frames backed by ``localCheckpoint`` blocks
+    cannot be computed afterwards, so call it between units of work
+    (bench/oracle sweeps, tests, tools). With ``spark=None`` the whole
+    memo is dropped and the active session's storage, if there is an
+    active session, is freed. Returns the number of persisted RDDs
+    released."""
+    if spark is None:
+        from pyspark.sql import SparkSession
+
+        spark = SparkSession.getActiveSession()
+        with _REGISTRY_LOCK:
             _SHARED.clear()
             _KEY_LOCKS.clear()
-        else:
-            app = spark.sparkContext.applicationId
-            items = [(k, v) for k, v in _SHARED.items() if k[0] == app]
-            for k, _ in items:
+        if spark is None:
+            return 0
+    else:
+        app = spark.sparkContext.applicationId
+        with _REGISTRY_LOCK:
+            for k in [k for k in _SHARED if k[0] == app]:
                 _SHARED.pop(k, None)
                 _KEY_LOCKS.pop(k, None)
-    n = 0
-    for _, df in items:
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped — blocks are gone anyway
-    return n
+    return release_all_persistent(spark)

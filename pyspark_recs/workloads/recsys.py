@@ -1383,7 +1383,6 @@ def rs17_rfm_segments(spark: SparkSession, sf: str) -> DataFrame:
     proves the formula IS ntile.
     """
     from pyspark_recs.sql import ntile_by_range
-    from pyspark_recs.workloads.common import register_persisted
 
     orders = load_table(spark, sf, "orders")
     per_cust = (
@@ -1395,7 +1394,6 @@ def rs17_rfm_segments(spark: SparkSession, sf: str) -> DataFrame:
         )
         .persist()
     )
-    register_persisted(per_cust)
     # Bounded driver scalar (one long) — also materializes the persist
     # so the three rank passes below reuse it instead of re-aggregating.
     n = per_cust.count()
@@ -2551,19 +2549,7 @@ def rs28_content_model_eval(spark: SparkSession, sf: str) -> DataFrame:
 
     data = build_content_training_data(spark, sf)
     assembler, model = train_content_model(data.train, max_iter=10)
-    # The summary's AUC computation persists an MLlib-internal RDD
-    # (BinaryClassificationMetrics) with no DataFrame to unpersist —
-    # register an RDD-level handle scoped to the ids it creates so
-    # teardown releases them (the r89 cache-lint class).
-    from pyspark_recs.workloads.common import (
-        PersistedRddHandle,
-        persisted_ids,
-        register_persisted,
-    )
-
-    _pre = persisted_ids(spark)
     auc = model.summary.areaUnderROC
-    register_persisted(PersistedRddHandle(spark, persisted_ids(spark) - _pre))
     preds = score_candidates(assembler, model, data.eval_candidates, k=10)
     met = ranking_metrics(preds, data.truth, k=10)
     counts = data.train.groupBy("label").agg(
@@ -3784,12 +3770,10 @@ def rs40_serving_config_selection(spark: SparkSession, sf: str) -> DataFrame:
     Scale: the grid is 4 rows over the artifact-served eval tables;
     the ceiling and the winner are 1-row broadcasts.
     """
-    from pyspark_recs.workloads.common import register_persisted
-
     # The grid is 4 rows but its lineage is the whole eval protocol —
-    # cache it (registered for teardown) so the ceiling, the argmax
-    # and the flagged output read one evaluation, not three.
-    grid = register_persisted(rs34_candidate_recall_sweep(spark, sf).persist())
+    # cache it so the ceiling, the argmax and the flagged output read
+    # one evaluation, not three.
+    grid = rs34_candidate_recall_sweep(spark, sf).persist()
     best = (
         grid.crossJoin(
             F.broadcast(grid.agg(F.max("recall_ppm").alias("max_recall")))
@@ -3849,11 +3833,10 @@ def rs35_kcore_trace(spark: SparkSession, sf: str) -> DataFrame:
 
 def _kcore_trace_build(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark_recs.workloads.common import (
-        persistent_rdd_snapshot,
-        release_local_checkpoints,
+        persisted_ids,
+        release_persisted_ids,
     )
 
-    ckpt_before = persistent_rdd_snapshot(spark)
     k = 20
     # The distinct (user, item) edge list IS the shared interaction
     # matrix's key set — ride the session-cached table the whole CF
@@ -3861,6 +3844,9 @@ def _kcore_trace_build(spark: SparkSession, sf: str) -> DataFrame:
     edges = _shared_interactions(spark, sf).select(
         F.col("user_id").alias("u"), F.col("item_id").alias("i")
     )
+    # Taken after the shared table materializes, so the diff below
+    # holds only this build's checkpoints.
+    ckpt_before = persisted_ids(spark)
     rows = []
     # Each round's survivors reference the previous round THREE times
     # (edge list + both degree tables), so a lazy lineage grows 3^r —
@@ -3917,10 +3903,8 @@ def _kcore_trace_build(spark: SparkSession, sf: str) -> DataFrame:
         idf.unpersist()
     # Every round's stats are already collected into `rows` (the result
     # is a LITERAL frame), so the per-round localCheckpoint blocks are
-    # dead weight — release the ones THIS build created (id-diff keeps
-    # any concurrent operator's live checkpoints untouched; the r89
-    # cache-lint class, localCheckpoint flavor).
-    release_local_checkpoints(spark, ckpt_before)
+    # dead weight — release the ones THIS build created.
+    release_persisted_ids(spark, persisted_ids(spark) - ckpt_before)
     return spark.createDataFrame(
         rows, "round long, n_edges long, n_users long, n_items long"
     )

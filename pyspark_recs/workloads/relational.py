@@ -4103,13 +4103,11 @@ def r83_skew_profile(spark: SparkSession, sf: str) -> DataFrame:
     form computed total/n_keys/rank via three global windows over the
     counts table).
     """
-    from pyspark_recs.workloads.common import register_persisted
 
     def profile(df: DataFrame, table: str, col: str) -> DataFrame:
         counts = df.groupBy(F.col(col).alias("key")).agg(
             F.count(F.lit(1)).alias("cnt")
         ).persist()
-        register_persisted(counts)
         tot = counts.agg(
             F.sum("cnt").alias("total"), F.count(F.lit(1)).alias("n_keys")
         )
@@ -4496,12 +4494,7 @@ def r89_trade_reach(spark: SparkSession, sf: str) -> DataFrame:
     # backbone filter, and the BFS's distinct'd edge list) and Spark
     # has no DataFrame CSE — cache it so the 3-join fact aggregation
     # runs ONCE. It is bounded at ≤ N² nation pairs, so the cache is
-    # KBs at any fact scale. Registered (as is khop's returned visited
-    # frame below) so unpersist_shared releases both at teardown —
-    # repeated r89 calls in a long-lived session must not grow cached
-    # storage monotonically (ADVICE r9).
-    from pyspark_recs.workloads.common import register_persisted
-
+    # KBs at any fact scale.
     pair = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cus, F.col("o_custkey") == F.col("c_custkey"))
@@ -4520,7 +4513,6 @@ def r89_trade_reach(spark: SparkSession, sf: str) -> DataFrame:
         )
         .cache()
     )
-    register_persisted(pair)
     tot = pair.agg(
         F.sum("q").alias("total"), F.count(F.lit(1)).alias("n")
     )
@@ -4532,7 +4524,7 @@ def r89_trade_reach(spark: SparkSession, sf: str) -> DataFrame:
     seeds = nation.filter(F.col("n_nationkey") < 5).select(
         F.col("n_nationkey")
     )
-    dist = register_persisted(khop_min_distance(edges, seeds, max_hops=4))
+    dist = khop_min_distance(edges, seeds, max_hops=4)
     return (
         dist.join(
             F.broadcast(nation.select("n_nationkey", "n_name")),

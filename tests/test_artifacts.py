@@ -276,8 +276,8 @@ def test_ranked_by_range_intermediate_released_by_teardown(spark):
     df = spark.range(1000).selectExpr("cast(id % 37 as string) as v")
     out = categorify_dictionary(df, "v")
     assert out.count() == 37
-    # the range-partitioned intermediate is registered in the shared
-    # memo, so teardown releases it
+    # the range-partitioned intermediate is persisted, and teardown
+    # frees everything the session persisted
     released = C.unpersist_shared(spark)
     assert released >= 1
     # registry is empty for this app afterwards

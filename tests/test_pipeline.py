@@ -16,6 +16,10 @@ from pyspark_recs.io.sinks import (
     predictions_table,
 )
 from pyspark_recs.pipeline import FlowConfig, run_flow, validate_config
+from pyspark_recs.workloads.common import (
+    persistent_rdd_snapshot,
+    unpersist_shared,
+)
 
 
 def test_validate_config_fail_fast():
@@ -61,6 +65,13 @@ def test_run_flow_end_to_end(
     assert known == recs
     # no sentinel written by run_flow's parquet path -> empty default
     assert point_lookup(spark, export, "missing-user") == []
+
+    # teardown frees everything the flow persisted: its cached dataset
+    # and the ALS factor RDDs. The cache manager is checked too — an
+    # entry whose blocks were freed by RDD id would still be there.
+    unpersist_shared(spark)
+    assert persistent_rdd_snapshot(spark) == []
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_predictions_table_shape_and_order(spark):

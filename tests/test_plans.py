@@ -793,10 +793,10 @@ def test_registry_wide_bounded_window_lint(spark):
 
 def test_cache_lint_flags_an_unregistered_persist(spark):
     # Negative control for the cache-teardown lint (VERDICT r10 #4):
-    # a query-shaped fn that persists + materializes WITHOUT
-    # register_persisted must leave a persisted RDD behind after
-    # unpersist_shared — exactly the r89 leak class tools/cache_lint.py
-    # sweeps the whole registry for.
+    # the detector must see a persist + materialize, and session
+    # teardown must free it with no registration — both a plain
+    # .persist() and an eager localCheckpoint, the RDD-level storage
+    # DataFrame.unpersist cannot reach.
     from pyspark_recs.workloads.common import (
         persistent_rdd_snapshot,
         release_all_persistent,
@@ -809,11 +809,14 @@ def test_cache_lint_flags_an_unregistered_persist(spark):
 
     leaky = spark.range(100).select((F.col("id") % 7).alias("k")).persist()
     leaky.count()
-    unpersist_shared(spark)
     assert persistent_rdd_snapshot(spark), (
-        "detector missed a deliberately-leaked persist"
+        "detector missed a materialized persist"
     )
-    release_all_persistent(spark)
+    spark.range(50).select((F.col("id") * 3).alias("k")).localCheckpoint(
+        eager=True
+    )
+    assert len(persistent_rdd_snapshot(spark)) == 2
+    unpersist_shared(spark)
     assert persistent_rdd_snapshot(spark) == []
 
 
@@ -902,7 +905,7 @@ def test_snapshot_plan_parquet_mode(spark, monkeypatch, tmp_path):
         str(tmp_path)
     )
 
-    # default mode unchanged: localCheckpoint blocks, teardown-registered
+    # default mode unchanged: localCheckpoint blocks, freed at teardown
     monkeypatch.delenv("SPARK_GRAFT_SNAPSHOT")
     snap2 = C.snapshot_plan(base)
     assert sorted(tuple(r) for r in snap2.collect()) == expected

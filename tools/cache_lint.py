@@ -1,11 +1,11 @@
 """Registry-wide cache-teardown lint: run EVERY registry query, call
 ``unpersist_shared``, and assert zero persisted RDDs remain in the JVM.
 
-This mechanizes the discipline the round-9 r89 leak was caught
-violating by review only: any operator that ``.persist()``/``.cache()``s
-an intermediate must either unpersist it before returning or register
-it via ``workloads.common.register_persisted`` so session teardown can
-release it. A query that leaves ANY persisted RDD behind after
+It checks the teardown contract: ``unpersist_shared`` frees everything
+the session persisted — the SQL cache manager and every persisted RDD,
+MLlib's factor RDDs and ``localCheckpoint`` blocks included — so
+operators ``.persist()``/``.cache()`` what they reuse and never track
+it. A query that leaves ANY persisted RDD behind after
 ``unpersist_shared`` fails the lint, with the offending RDD names in
 the log.
 
@@ -59,7 +59,6 @@ def main() -> int:
         names = [n for n in names if n in set(only)]
 
     # Baseline must be clean (a dirty session would blame query 1).
-    release_all_persistent(spark)
     unpersist_shared(spark)
 
     leaks: dict[str, list] = {}

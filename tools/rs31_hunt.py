@@ -84,7 +84,6 @@ def main() -> int:
     flips = 0
     for it in range(n_iter):
         unpersist_shared()
-        spark.catalog.clearCache()
 
         # driver tier-0 prefix pressure (results discarded)
         from pyspark_recs.workloads import QUERIES
@@ -106,7 +105,6 @@ def main() -> int:
         # shared-bypass rebuild: clear the cache so every builder
         # recomputes from the raw parquet, then hash rs31 again
         unpersist_shared()
-        spark.catalog.clearCache()
         observed["rs31/fresh"] = df_hash(
             recsys.rs31_behavioral_audit(spark, sf)
         )

@@ -422,10 +422,8 @@ def main() -> None:
         # p=32 (simhash32, gram tables, capped histories) and the
         # invariance claim would be partly vacuous.
         unpersist_shared(spark)
-        spark.catalog.clearCache()
         c_b, t_b = run_checksum(name, PARTITION_SETTINGS[1])
         unpersist_shared(spark)
-        spark.catalog.clearCache()
         if c_a != c_b:
             mismatches.append(name)
         results[name] = {
