@@ -41,7 +41,7 @@ def pagerank(
     rather than silently redistributed.
 
     Determinism: the per-dst contribution sum is the one order-dependent
-    double reduction, so it uses the workloads.common fixed-point
+    double reduction, so it uses the pyspark_recs.fixedpoint
     discipline — quantize each contribution to a BIGINT at 10^-scale,
     SUM exactly, divide once. Every other operation (1/N, rank/out_deg,
     the damping affine map) is an identical scalar double expression,
@@ -60,8 +60,6 @@ def pagerank(
     single job instead of paying a checkpoint job per round.
     """
     mult = float(10**scale)
-    from pyspark_recs.workloads.common import snapshot_plan
-
     # SNAPSHOT the distinct'd edge list instead of .cache() (r12-opt,
     # guide §3.3): a cache keeps the FULL edge-derivation lineage in
     # every consumer's plan (r57's static plan embedded the fact-join
@@ -71,10 +69,11 @@ def pagerank(
     # localCheckpoint materializes the derivation exactly once and
     # truncates lineage, so every consumer — nodes, deg, 3 iterations —
     # plans against a leaf.
-    e = snapshot_plan(
+    e = (
         edges.filter(F.col(src) != F.col(dst))
         .select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -163,8 +162,6 @@ def personalized_pagerank(
     (duplicate edges) — the oracle catches it, but nothing here does.
     """
     mult = float(10**scale)
-    from pyspark_recs.workloads.common import snapshot_plan
-
     # SNAPSHOT the distinct'd edge list (r12-opt, guide §3.3): building
     # e_deg below consumes e TWICE (the degree aggregate and the join
     # side), and rs16's e derives from a union of two fact-join
@@ -174,10 +171,11 @@ def personalized_pagerank(
     if pre_normalized:
         e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     else:
-        e = snapshot_plan(
+        e = (
             edges.filter(F.col(src) != F.col(dst))
             .select(F.col(src).alias("src"), F.col(dst).alias("dst"))
             .distinct()
+            .localCheckpoint(eager=True)
         )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
     # Pre-join out-degrees ONCE and cache: the iteration then needs a
@@ -367,8 +365,6 @@ def triangle_counts(
     budget, disable it: the nv lookup becomes a shuffle join keyed on
     v — still edge-sized rows, never wedge-sized.
     """
-    from pyspark_recs.workloads.common import snapshot_plan
-
     pairs = edges.filter(F.col(src) != F.col(dst)).select(
         F.least(F.col(src), F.col(dst)).alias("lo"),
         F.greatest(F.col(src), F.col(dst)).alias("hi"),
@@ -403,8 +399,10 @@ def triangle_counts(
     # sums are set-determined, so the final counts are identical for
     # any element order — the sort was pure cost (~0.3 s at sf0.1,
     # A/B'd; oracle-confirmed invariant).
-    adj = snapshot_plan(
-        oriented.groupBy("u").agg(F.collect_set("v").alias("nu"))
+    adj = (
+        oriented.groupBy("u")
+        .agg(F.collect_set("v").alias("nu"))
+        .localCheckpoint(eager=True)
     )
     nv_side = adj.select(F.col("u").alias("v"), F.col("nu").alias("nv"))
     if broadcast_adjacency:
@@ -474,12 +472,11 @@ def khop_min_distance(
     # Snapshot (not cache) the pruned edge list: every hop references
     # it, and a cache would re-embed the full backbone-derivation
     # lineage in each hop's plan (see pagerank's note; r12-opt).
-    from pyspark_recs.workloads.common import snapshot_plan
-
-    e = snapshot_plan(
+    e = (
         edges.filter(F.col(src) != F.col(dst))
         .select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
     visited = (
         seeds.select(F.col(seeds.columns[0]).alias("node"))
@@ -510,5 +507,5 @@ def khop_min_distance(
     for df in pinned:
         if df is not result:
             df.unpersist()
-    # e is a snapshot_plan; its blocks release at session teardown.
+    # e is a localCheckpoint; its blocks release at session teardown.
     return result

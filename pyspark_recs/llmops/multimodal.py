@@ -613,18 +613,16 @@ def vad_segments(windows: DataFrame, threshold: int) -> DataFrame:
     """
     from pyspark.sql.window import Window as W
 
-    from pyspark_recs.workloads.common import snapshot_plan
-
     # The window stream is consumed by TWO plan branches (the per-doc
     # counts and the island merge), and its upstream is typically the
     # decode mapInPandas seam — without a materialization barrier each
     # branch re-executes the full synth+decode (l82's before plan shows
     # the codec seam twice). Snapshot the 3-column ok projection once;
     # both branches read the (tiny: integers-per-window) blocks.
-    ok = snapshot_plan(
-        windows.filter(F.col("status") == "ok").select(
-            "doc_id", "win_idx", "win_abs"
-        )
+    ok = (
+        windows.filter(F.col("status") == "ok")
+        .select("doc_id", "win_idx", "win_abs")
+        .localCheckpoint(eager=True)
     )
     base = ok.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_windows"),
@@ -942,15 +940,13 @@ def scene_cuts(frames: DataFrame, threshold: int) -> DataFrame:
     """
     from pyspark.sql.window import Window as W
 
-    from pyspark_recs.workloads.common import snapshot_plan
-
     ok = frames.filter(F.col("status") == "ok")
     w = W.partitionBy("doc_id").orderBy("frame_idx")
     # Both consumers (per-doc totals and per-scene lengths) need only
     # these three columns, and the upstream is the frame-decode seam —
     # snapshot once so the synth+decode mapInPandas pair and the
     # doc_id window execute a single time instead of once per branch.
-    cuts = snapshot_plan(
+    cuts = (
         ok.withColumn(
             "is_cut",
             (
@@ -966,6 +962,7 @@ def scene_cuts(frames: DataFrame, threshold: int) -> DataFrame:
         )
         .withColumn("scene_id", F.sum("is_cut").over(w))
         .select("doc_id", "is_cut", "scene_id")
+        .localCheckpoint(eager=True)
     )
     per_scene = cuts.groupBy("doc_id", "scene_id").agg(
         F.count(F.lit(1)).alias("scene_frames")

@@ -88,14 +88,12 @@ def prepare_corpus(
     # doc_id-only (KB–MB at any corpus scale); consumers re-attach
     # text with a cheap semi-join probe of the scan, so text itself
     # never materializes and never shuffles.
-    from pyspark_recs.workloads.common import snapshot_plan
-
     if url_col is not None:
         url_winners = docs.groupBy(url_col).agg(
             F.min("doc_id").alias("doc_id")
         )
         url_kept = docs.join(
-            snapshot_plan(url_winners.select("doc_id")),
+            url_winners.select("doc_id").localCheckpoint(eager=True),
             "doc_id",
             "left_semi",
         )
@@ -104,7 +102,9 @@ def prepare_corpus(
 
     rules = gopher_rules(url_kept)
     kept = url_kept.join(
-        snapshot_plan(rules.filter(F.col("passes")).select("doc_id")),
+        rules.filter(F.col("passes"))
+        .select("doc_id")
+        .localCheckpoint(eager=True),
         "doc_id",
         "left_semi",
     )

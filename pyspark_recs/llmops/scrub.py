@@ -364,7 +364,6 @@ def decontaminate_spans(
         bench = bench_grams.select(F.col("gram").alias("g"))
 
     from pyspark_recs.io.loaders import spread_partitions
-    from pyspark_recs.workloads.common import snapshot_plan
 
     tr = spread_partitions(
         train.select("doc_id", tokens(F.col(text_col)).alias("toks"))
@@ -394,14 +393,14 @@ def decontaminate_spans(
     # `size(pos_grams) > 0 AND isnotnull(pos_grams)` predicate BELOW
     # the projections — re-inlining the whole tokenize→md5→Horner
     # chain into a scan-side Filter that evaluated it twice more per
-    # row (plans/r12/l64_decontaminate_spans_before.txt node (5)).
+    # row (l64's physical plan showed that Filter above the scan).
     # Materializing (doc_id, toks, pos_grams) once runs the expensive
     # projection exactly once; both consumers read the snapshot
     # (spread_partitions above parallelizes the build — the raw
     # parquet is a single split at test SF).
-    snap = snapshot_plan(
-        hashed.select("doc_id", "toks", acc.alias("pos_grams"))
-    )
+    snap = hashed.select(
+        "doc_id", "toks", acc.alias("pos_grams")
+    ).localCheckpoint(eager=True)
     starts = (
         snap.select(
             "doc_id", F.posexplode("pos_grams").alias("pos", "g")

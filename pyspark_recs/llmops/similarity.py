@@ -1059,9 +1059,9 @@ def embedding_covariance(
     E[x_i]E[x_j]. Cross terms are generated JVM-side per row (d²/2
     structs from one nested transform — no self-join), then fixed-point
     summed so the matrix is bit-identical across engines and
-    partitionings (the workloads.common discipline; here the moment
-    sums ARE the shuffle, ≤ d²/2 partial aggregates per partition, so
-    shuffle size is independent of row count).
+    partitionings (the pyspark_recs.fixedpoint discipline; here the
+    moment sums ARE the shuffle, ≤ d²/2 partial aggregates per
+    partition, so shuffle size is independent of row count).
 
     Precision budget: |x_i·x_j|·scale·N must stay < 2^63 — at the
     default 1e12 and unit-scale embeddings that is ~10^6 rows per
@@ -1601,10 +1601,10 @@ def ivfpq_topk(
     # Q·nprobe rows; codes is one 10-byte row per candidate): after
     # the window/aggregate subtrees Spark's size estimates are wildly
     # pessimistic and it planned SortMergeJoins — 4 exchanges + 4
-    # sorts for sides this small (guide §3.1 "use an explicit
-    # broadcast hint when you know a side is small";
-    # plans/r13/l58_ivfpq_search_before.txt). The hints replace the
-    # cascade with two BroadcastHashJoins and leave the corpus-sized
+    # sorts for sides this small in l58's physical plan (guide §3.1
+    # "use an explicit broadcast hint when you know a side is
+    # small"). The hints replace the cascade with two
+    # BroadcastHashJoins and leave the corpus-sized
     # inverted file un-shuffled. At 10⁹ vectors codes outgrows the
     # broadcast budget — bucket it by cell_id instead (docstring).
     pairs = (
@@ -1745,10 +1745,7 @@ def lloyd_kmeans_fixed(
             ).cast("long"),
         ).alias("q"),
     )
-    from pyspark_recs.workloads.common import (
-        persisted_ids,
-        release_persisted_ids,
-    )
+    from pyspark_recs.session import persisted_ids, release_persisted_ids
 
     spark = vectors.sparkSession
     # q feeds iters+1 assignment passes and the returned plan

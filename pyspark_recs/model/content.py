@@ -16,7 +16,10 @@ Everything about the PROTOCOL (split rule, negative generation, feature
 values, candidate sets) is deterministic and SQL-expressible — only the
 L-BFGS fit itself is iterative float math, which is why the registry
 query (rs28) exposes the protocol exactly and brackets the model's
-quality the r50/rs04 way.
+quality the r50/rs04 way. The sf-keyed builders of that protocol
+(``item_user_features``, ``build_content_training_data``) live with
+the registry's holdout split in workloads/recsys.py; this module holds
+the model, which takes any ``ContentTrainingData``.
 
 Scale: features are dimension-table-sized (broadcast joins); training
 rows are |train interactions| + |users|·n_neg — never a crossJoin; the
@@ -28,7 +31,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 FEATURE_COLS = (
@@ -40,76 +43,6 @@ FEATURE_COLS = (
     "segment_code",
     "acctbal_z",
 )
-
-
-def item_user_features(
-    spark: SparkSession, sf: str, train_inter: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """(item_features, user_features) engineered with the F1–F5
-    operators from the TRAIN interactions + dimension tables.
-
-    Item side (workflow_builder.py:43-58 analog): Categorify(p_brand),
-    Categorify(p_type), Bucketize(p_retailprice, width 100),
-    p_size, and the F5 JoinGroupby popularity → FillMissing(0) →
-    z-score chain. User side (:25-41 analog): Categorify(c_mktsegment)
-    and z-scored c_acctbal. Fit statistics (dictionaries, mu/sigma)
-    come from train-side data only — no leakage from the holdout.
-    """
-    from pyspark_recs.features.categorify import Categorify
-    from pyspark_recs.io import load_table
-    from pyspark_recs.sql.transforms import bucketize_fixed_width
-
-    part = load_table(spark, sf, "part").select(
-        F.col("p_partkey").alias("item_id"),
-        "p_brand",
-        "p_type",
-        "p_retailprice",
-        F.col("p_size").cast("double").alias("p_size"),
-    )
-    cat_item = Categorify(["p_brand", "p_type"]).fit(part)
-    item = bucketize_fixed_width(
-        cat_item.transform(part), "p_retailprice", 100.0,
-        alias="price_bucket",
-    )
-    pop = train_inter.groupBy("item_id").agg(
-        F.sum("n_purchases").cast("double").alias("item_pop")
-    )
-    item = item.join(F.broadcast(pop), "item_id", "left").withColumn(
-        "item_pop", F.coalesce("item_pop", F.lit(0.0))
-    )
-    stats = item.agg(
-        F.avg("item_pop").alias("mu"),
-        F.stddev_samp("item_pop").alias("sigma"),
-    ).collect()[0]
-    sigma = stats.sigma if stats.sigma else 1.0
-    item = item.select(
-        "item_id",
-        F.col("p_brand_code").alias("brand_code"),
-        F.col("p_type_code").alias("type_code"),
-        F.col("price_bucket").cast("double").alias("price_bucket"),
-        "p_size",
-        ((F.col("item_pop") - F.lit(stats.mu or 0.0)) / F.lit(sigma)).alias(
-            "item_pop_z"
-        ),
-    )
-
-    cust = load_table(spark, sf, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment", "c_acctbal"
-    )
-    cat_user = Categorify(["c_mktsegment"]).fit(cust)
-    ustats = cust.agg(
-        F.avg("c_acctbal").alias("mu"),
-        F.stddev_samp("c_acctbal").alias("sigma"),
-    ).collect()[0]
-    usigma = ustats.sigma if ustats.sigma else 1.0
-    user = cat_user.transform(cust).select(
-        "user_id",
-        F.col("c_mktsegment_code").alias("segment_code"),
-        ((F.col("c_acctbal") - F.lit(ustats.mu or 0.0)) / F.lit(usigma)).alias(
-            "acctbal_z"
-        ),
-    )
-    return item, user
 
 
 def hash_negatives(
@@ -170,55 +103,6 @@ class ContentTrainingData:
     train: DataFrame          # user_id, item_id, label, <FEATURE_COLS>
     eval_candidates: DataFrame  # user_id, item_id, <FEATURE_COLS>
     truth: DataFrame          # user_id, item_id (held-out positives)
-
-
-def build_content_training_data(
-    spark: SparkSession, sf: str, n_neg_train: int = 5, n_neg_eval: int = 20
-) -> ContentTrainingData:
-    """Assemble the supervised problem from the leave-one-out protocol:
-    positives = TRAIN-split interactions (label 1), negatives =
-    deterministic hash candidates (label 0), features joined from the
-    train-fit feature tables; eval candidates = each user's held-out
-    items ∪ a disjoint negative sample, with the held-out items as
-    truth."""
-    from pyspark_recs.io import load_table
-    from pyspark_recs.workloads.recsys import (
-        _holdout_test_items,
-        _holdout_train_inter,
-    )
-
-    train_inter = _holdout_train_inter(spark, sf)
-    test_items = _holdout_test_items(spark, sf)
-    item_f, user_f = item_user_features(spark, sf, train_inter)
-    n_items_df = load_table(spark, sf, "part").agg(
-        F.max("p_partkey").alias("n_items")
-    )
-
-    pos = train_inter.select("user_id", "item_id", F.lit(1.0).alias("label"))
-    neg = hash_negatives(
-        train_inter, n_items_df, n_neg_train, salt="train"
-    ).select("user_id", "item_id", F.lit(0.0).alias("label"))
-    train = (
-        pos.unionByName(neg)
-        .join(F.broadcast(item_f), "item_id", "left")
-        .join(F.broadcast(user_f), "user_id", "left")
-        .fillna(0.0, subset=list(FEATURE_COLS))
-    )
-
-    eval_neg = hash_negatives(
-        train_inter, n_items_df, n_neg_eval, salt="eval"
-    ).select("user_id", "item_id")
-    cands = (
-        test_items.select("user_id", "item_id")
-        .unionByName(eval_neg)
-        .distinct()
-        .join(F.broadcast(item_f), "item_id", "left")
-        .join(F.broadcast(user_f), "user_id", "left")
-        .fillna(0.0, subset=list(FEATURE_COLS))
-    )
-    return ContentTrainingData(
-        train=train, eval_candidates=cands, truth=test_items
-    )
 
 
 def train_content_model(

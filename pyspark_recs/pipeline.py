@@ -179,11 +179,24 @@ def run_flow(
         train_i, valid_truth, cfg.param_grid, k=cfg.top_k, seed=cfg.seed
     )
     best = results[0]
+    # An empty window scores every model 0.0: the argmax would pick by
+    # grid order and the export would come out empty. n_users rides the
+    # metrics aggregate, so the check adds no Spark job.
+    if best.metrics["n_users"] == 0:
+        raise ValueError(
+            f"validation window [{cfg.training_end_date}, "
+            f"{cfg.validation_end_date}) has no users to evaluate"
+        )
 
     # Held-out test metrics (M3) + batch top-k inference (M4/M5).
     test_users = test_truth.select("user_id").distinct()
     preds = recommend_topk(best.model, test_users, k=cfg.top_k)
     test_metrics = ranking_metrics(preds, test_truth, k=cfg.top_k)
+    if test_metrics["n_users"] == 0:
+        raise ValueError(
+            f"test window (from {cfg.validation_end_date} on) has no "
+            "users to evaluate"
+        )
 
     keyed = predictions_table(preds, k=cfg.top_k)
     if export_path:

@@ -22,7 +22,7 @@ RUNTIME_CONFS: dict[str, str] = {
     # Keep Spark's default: cached-plan output partitioning stays
     # PINNED (false). Round 7 set this true to let AQE coalesce
     # shared_plan builders in vanilla 200-partition sessions, but the
-    # round-8 A/B (tools/bisect_cachedplan.py, 3 runs each, fresh
+    # round-8 A/B (3 runs each, fresh
     # sessions, bench protocol) measured `true` as a pure regression in
     # the bench session: l43 1.23->1.93s warm (+57%), rs11 2.55->3.44s
     # (+35%), and the full 133-query bench 125.5s (true) -> 121.7s
@@ -89,3 +89,58 @@ def get_spark(
         builder = builder.master(f"local[{cpus}]")
     spark = builder.getOrCreate()
     return apply_runtime_confs(spark)
+
+
+def _persistent_rdds(spark):
+    """Yield ``(id, JavaRDD)`` for every RDD the JVM currently holds
+    persisted."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+    while it.hasNext():
+        t = it.next()
+        yield int(t._1()), t._2()
+
+
+def _unpersist_rdds(rdds: list) -> int:
+    for r in rdds:
+        try:
+            r.unpersist(False)
+        except Exception:
+            pass
+    return len(rdds)
+
+
+def persistent_rdd_snapshot(spark) -> list:
+    """(id, description) of every RDD the JVM currently holds
+    persisted — the mechanical ground truth behind the registry-wide
+    cache-teardown lint (tools/cache_lint.py): after a query runs and
+    session teardown fires, this list must be EMPTY."""
+    return [
+        (i, (r.name() or r.toString())[:120])
+        for i, r in _persistent_rdds(spark)
+    ]
+
+
+def release_persisted_ids(spark, ids) -> int:
+    """Unpersist the persisted RDDs with exactly these ids. Used by
+    iterative operators to drop SUPERSEDED localCheckpoint rounds while
+    the live one keeps serving, and to drop checkpoints nothing
+    references any more, before session teardown."""
+    ids = set(ids)
+    if not ids:
+        return 0
+    return _unpersist_rdds([r for i, r in _persistent_rdds(spark) if i in ids])
+
+
+def persisted_ids(spark) -> set:
+    """Just the id set of :func:`persistent_rdd_snapshot` — the
+    snapshot-diff primitive operators use to scope RDD-level releases
+    to storage THEY created."""
+    return {i for i, _ in _persistent_rdds(spark)}
+
+
+def release_all_persistent(spark) -> int:
+    """Force-release every persisted RDD + clear the SQL cache manager.
+    Returns how many RDDs were force-unpersisted."""
+    n = _unpersist_rdds([r for _, r in _persistent_rdds(spark)])
+    spark.catalog.clearCache()
+    return n

@@ -750,14 +750,12 @@ def _order_bucketed(
     Earlier rounds fixed that with an ``approxQuantile`` driver scan +
     a pure-projection bucket id — consistent, but it made THREE full
     upstream executions per run (quantile scan, local-window branch,
-    offsets branch; s11's plan showed 4 parquet scans,
-    plans/r12/s11_peak_concurrency_before.txt).
+    offsets branch; s11's physical plan showed 4 parquet scans).
 
     This round's fix (guide §3.3 "materialise the intermediate", §2.4
     "share one exchange"): range-partition, stamp ``_pid``, and
-    SNAPSHOT the result once (``workloads.common.snapshot_plan`` —
-    eager localCheckpoint). The materialization
-    freezes the pid assignment, so both consumer branches read the
+    SNAPSHOT the result once (eager ``localCheckpoint``). The
+    materialization freezes the pid assignment, so both consumer branches read the
     same bucketing by construction — resampling can never diverge —
     and the upstream executes exactly once (inside the range
     exchange). Result rows are identical for ANY boundary placement
@@ -768,12 +766,10 @@ def _order_bucketed(
     keys equal order values to one partition and orders partitions
     ascending, which is exactly the contract ``_pid`` must satisfy.
     """
-    from pyspark_recs.workloads.common import snapshot_plan
-
-    return snapshot_plan(
-        df.repartitionByRange(num_ranges, F.col(order_col)).withColumn(
-            "_pid", F.spark_partition_id()
-        )
+    return (
+        df.repartitionByRange(num_ranges, F.col(order_col))
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
     )
 
 

@@ -74,7 +74,7 @@ def streaming_hopping_agg(
     result is hash-compared against a batch/oracle twin (s18), since a
     float sum's value depends on state-update order."""
     if exact_sum:
-        from pyspark_recs.workloads.common import dsum
+        from pyspark_recs.fixedpoint import dsum
 
         total = dsum("value")
     else:

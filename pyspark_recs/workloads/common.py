@@ -1,75 +1,12 @@
-"""Oracle-determinism helpers.
-
-Floating-point aggregates are the one place a Spark result and a DuckDB
-result can legitimately differ (double summation is order-dependent, and
-the engines' double→decimal casts disagree on exact decimal ties — Spark
-rounds the shortest decimal repr HALF_UP via BigDecimal, DuckDB rounds
-HALF_EVEN in scaled double). We make aggregates bit-exact instead of
-tolerance-compared, via fixed-point integer summation:
-
-    term  = floor(x * 10^scale + 0.5)  as BIGINT   -- identical IEEE double
-                                                    -- ops in both engines,
-                                                    -- so identical results
-                                                    -- by construction
-    sum   = SUM(term)                               -- exact, order-free
-    value = CAST(sum AS DOUBLE) / 10^scale          -- identical division
-
-Cross-engine agreement holds for *any* input double because both engines
-evaluate the same deterministic double expression before the exact
-integer sum — there is no rounding-mode or summation-order freedom left.
-
-Precision budget: quantization at 10^-scale per term. Keep
-|x| * 10^scale ≲ 1e15 so terms stay well under 2^53 and BIGINT sums
-under 2^63 (e.g. scale 6 with |x| ≤ 1e8 and ≤ 1e7 rows per group). For
-squares/large products, downscale x by a power of two first (exact in
-binary) and rescale the final moment — see the variance queries in
-workloads/relational.py.
-
-At 100 TB this pattern is also an engineering win: results are
-bit-reproducible across cluster sizes, partitionings and AQE decisions,
-which makes golden-file testing of pipelines possible at all.
-"""
+"""Registry helpers: session-scoped shared plans, cross-session
+artifact checkpoints and the session teardown the registry's callers
+run between units of work."""
 
 from __future__ import annotations
 
-import atexit as _atexit
-import itertools as _itertools
 import os as _os
-import shutil as _shutil
-import tempfile as _tempfile
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-
-def dsum(col: Column | str, scale: int = 6) -> Column:
-    """Order-independent, engine-agreed sum of a double expression (as
-    double, quantized at 10^-scale)."""
-    c = F.col(col) if isinstance(col, str) else col
-    mult = float(10**scale)
-    q = F.floor(c * F.lit(mult) + F.lit(0.5)).cast("long")
-    return (F.sum(q).cast("double") / F.lit(mult))
-
-
-def davg(col: Column | str, scale: int = 6) -> Column:
-    """Engine-agreed mean: fixed-point sum / count, evaluated in double."""
-    c = F.col(col) if isinstance(col, str) else col
-    mult = float(10**scale)
-    q = F.floor(c * F.lit(mult) + F.lit(0.5)).cast("long")
-    return F.sum(q).cast("double") / F.lit(mult) / F.count(F.lit(1))
-
-
-def sql_dsum(expr: str, scale: int = 6) -> str:
-    """DuckDB twin of ``dsum``."""
-    mult = float(10**scale)
-    return (
-        f"(CAST(sum(CAST(floor(({expr}) * {mult!r} + 0.5) AS BIGINT)) "
-        f"AS DOUBLE) / {mult!r})"
-    )
-
-
-def sql_davg(expr: str, scale: int = 6) -> str:
-    return f"({sql_dsum(expr, scale)} / count(*))"
+from pyspark_recs import session
 
 
 # --------------------------------------------------------------- shared plans
@@ -147,7 +84,7 @@ ARTIFACT_ROOT = _os.environ.get(
 # manual-version discipline fails silently (coefficients changed in
 # model/content.py with no ARTIFACT_V bump anywhere near the diff),
 # and a partial glob list has the same failure one hop out: builders
-# also call into llmops/hashing.py, io/loaders.py and this module's
+# also call into llmops/hashing.py, io/loaders.py and fixedpoint.py's
 # dsum/davg, so an edit there would change artifact CONTENTS without
 # moving the PATH. Hashing every .py in the package closes that class
 # completely — the worst case of the wide hash is a redundant rebuild
@@ -334,131 +271,10 @@ def artifact_plan(spark, sf: str, key: str, version: str, builder):
     return shared_plan(spark, sf, stem, load_or_build)
 
 
-def _persistent_rdds(spark):
-    """Yield ``(id, JavaRDD)`` for every RDD the JVM currently holds
-    persisted."""
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        t = it.next()
-        yield int(t._1()), t._2()
-
-
-def _unpersist_rdds(rdds: list) -> int:
-    for r in rdds:
-        try:
-            r.unpersist(False)
-        except Exception:
-            pass
-    return len(rdds)
-
-
-def persistent_rdd_snapshot(spark) -> list:
-    """(id, description) of every RDD the JVM currently holds
-    persisted — the mechanical ground truth behind the registry-wide
-    cache-teardown lint (tools/cache_lint.py): after a query runs and
-    ``unpersist_shared`` fires, this list must be EMPTY."""
-    return [
-        (i, (r.name() or r.toString())[:120])
-        for i, r in _persistent_rdds(spark)
-    ]
-
-
-def release_persisted_ids(spark, ids) -> int:
-    """Unpersist the persisted RDDs with exactly these ids. Used by
-    iterative operators to drop SUPERSEDED localCheckpoint rounds while
-    the live one keeps serving, and to drop checkpoints nothing
-    references any more, before session teardown."""
-    ids = set(ids)
-    if not ids:
-        return 0
-    return _unpersist_rdds([r for i, r in _persistent_rdds(spark) if i in ids])
-
-
-def persisted_ids(spark) -> set:
-    """Just the id set of :func:`persistent_rdd_snapshot` — the
-    snapshot-diff primitive operators use to scope RDD-level releases
-    to storage THEY created."""
-    return {i for i, _ in _persistent_rdds(spark)}
-
-
-_SNAPSHOT_SEQ = _itertools.count()
-
-
-def snapshot_plan(df):
-    """Materialize a multiply-consumed intermediate ONCE via
-    ``localCheckpoint(eager=True)``.
-
-    This is the optimization-guide §3.3 move ("materialising an
-    intermediate result truncates the plan") applied to helpers whose
-    output feeds 2-3 plan branches (e.g. ``_order_bucketed``: a driver
-    quantile scan + the local-window branch + the offsets branch):
-    without it, every branch re-executes the FULL upstream. Unlike
-    ``.cache()``, a localCheckpoint is not registered in the SQL
-    CacheManager, so a bit-identical plan built later (the bench's
-    repeated runs) does NOT silently reuse this run's blocks — every
-    execution honestly pays one upstream compute.
-
-    Non-goal (by default): fault tolerance. localCheckpoint blocks are
-    not recomputable; a lost executor fails the query (the documented
-    trade, same as lloyd_kmeans_fixed's round snapshots). Callers pass
-    pre-aggregated or narrowly-projected frames, so the materialized
-    bytes stay small relative to the upstream they replace.
-
-    ``$SPARK_GRAFT_SNAPSHOT=parquet`` (VERDICT r12 #4) switches EVERY
-    snapshot_plan call site at once from executor-memory blocks to a
-    scratch-parquet write + read-back — the cluster-scale variant that
-    survives executor loss and never competes with execution memory.
-    Scratch dirs are unique per call, rooted at
-    ``$SPARK_GRAFT_SNAPSHOT_DIR`` (default: a session tempdir) and
-    removed at interpreter exit. Default stays ``localCheckpoint``:
-    on this single-node rig the extra fsync+parse round trip is pure
-    cost, but the knob removes the local-mode assumption from every
-    snapshotting operator without per-site rewrites.
-    """
-    spark = df.sparkSession
-    if _os.environ.get("SPARK_GRAFT_SNAPSHOT", "localCheckpoint") == "parquet":
-        path = _os.path.join(
-            _snapshot_scratch_root(), f"snap_{next(_SNAPSHOT_SEQ)}"
-        )
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-    return df.localCheckpoint(eager=True)
-
-
-_SNAPSHOT_SCRATCH: list = []
-
-
-def _snapshot_scratch_root() -> str:
-    """Lazily-created scratch root for parquet-mode snapshots: one
-    directory per process, removed at interpreter exit (same lifecycle
-    as the streaming scratch dirs). ``$SPARK_GRAFT_SNAPSHOT_DIR``
-    overrides the location for deployments that want snapshots on a
-    specific filesystem (e.g. durable object storage at cluster
-    scale)."""
-    if not _SNAPSHOT_SCRATCH:
-        base = _os.environ.get("SPARK_GRAFT_SNAPSHOT_DIR")
-        if base:
-            _os.makedirs(base, exist_ok=True)
-            root = _tempfile.mkdtemp(prefix="snapshots_", dir=base)
-        else:
-            root = _tempfile.mkdtemp(prefix="spark_graft_snapshots_")
-        _atexit.register(_shutil.rmtree, root, True)
-        _SNAPSHOT_SCRATCH.append(root)
-    return _SNAPSHOT_SCRATCH[0]
-
-
-def release_all_persistent(spark) -> int:
-    """Force-release every persisted RDD + clear the SQL cache manager.
-    Returns how many RDDs were force-unpersisted."""
-    n = _unpersist_rdds([r for _, r in _persistent_rdds(spark)])
-    spark.catalog.clearCache()
-    return n
-
-
 def unpersist_shared(spark=None) -> int:
     """Session teardown: drop ``spark``'s :func:`shared_plan` memo
     entries, then free everything the session persisted
-    (:func:`release_all_persistent`) — shared plans, operator-internal
+    (:func:`pyspark_recs.session.release_all_persistent`) — shared plans, operator-internal
     caches, MLlib's persisted RDDs and ``localCheckpoint`` blocks
     alike. Operators therefore persist what they reuse and leave the
     freeing to this call; frames backed by ``localCheckpoint`` blocks
@@ -482,4 +298,4 @@ def unpersist_shared(spark=None) -> int:
             for k in [k for k in _SHARED if k[0] == app]:
                 _SHARED.pop(k, None)
                 _KEY_LOCKS.pop(k, None)
-    return release_all_persistent(spark)
+    return session.release_all_persistent(spark)

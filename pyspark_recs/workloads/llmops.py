@@ -4213,12 +4213,10 @@ def l83_image_phash_dedup(spark: SparkSession, sf: str) -> DataFrame:
     # so without a barrier every branch re-runs the full codec pass
     # (the before plan shows the mapInPandas pair twice). Snapshot the
     # 4-small-column hash table once.
-    from pyspark_recs.workloads.common import snapshot_plan
-
-    hashed = snapshot_plan(
-        image_ahash(payloads).select(
-            "doc_id", "status", "phash_hi", "phash_lo"
-        )
+    hashed = (
+        image_ahash(payloads)
+        .select("doc_id", "status", "phash_hi", "phash_lo")
+        .localCheckpoint(eager=True)
     )
     ok = hashed.filter(F.col("status") == "ok")
     clusters = ok.groupBy("phash_hi", "phash_lo").agg(
@@ -5398,7 +5396,6 @@ def l100_robots_gate(spark: SparkSession, sf: str) -> DataFrame:
         canonicalize_url,
         synthetic_url_blocked,
     )
-    from pyspark_recs.workloads.common import snapshot_plan
 
     docs = load_table(spark, sf, "documents").select("doc_id")
     canon = canonicalize_url(synthetic_url_blocked(F.col("doc_id")))
@@ -5407,18 +5404,16 @@ def l100_robots_gate(spark: SparkSession, sf: str) -> DataFrame:
     # both the hosts→rules branch and the decision join, and the
     # canonicalize+parse_url chain is the query's expensive projection
     # — without this each branch re-scans and re-parses.
-    urls = snapshot_plan(
-        docs.select(
-            "doc_id",
-            F.parse_url(canon, F.lit("HOST")).alias("host"),
-            F.concat(
-                F.parse_url(canon, F.lit("PATH")),
-                F.when(
-                    query.isNotNull(), F.concat(F.lit("?"), query)
-                ).otherwise(F.lit("")),
-            ).alias("path"),
-        )
-    )
+    urls = docs.select(
+        "doc_id",
+        F.parse_url(canon, F.lit("HOST")).alias("host"),
+        F.concat(
+            F.parse_url(canon, F.lit("PATH")),
+            F.when(
+                query.isNotNull(), F.concat(F.lit("?"), query)
+            ).otherwise(F.lit("")),
+        ).alias("path"),
+    ).localCheckpoint(eager=True)
     hosts = urls.select("host").distinct().withColumn(
         "host_idx",
         F.regexp_extract("host", r"^site(\d+)\.", 1).cast("int"),

@@ -11,12 +11,13 @@ from pyspark.sql import functions as F
 from pyspark_recs.io import load_table
 from pyspark_recs.sql import top_k_per_group
 from pyspark_recs.llmops.hashing import md5_long, sql_md5_long
-from pyspark_recs.workloads.common import (
-    artifact_plan,
-    dsum,
-    shared_plan,
-    sql_dsum,
+from pyspark_recs.fixedpoint import dsum, sql_dsum
+from pyspark_recs.model.content import (
+    FEATURE_COLS,
+    ContentTrainingData,
+    hash_negatives,
 )
+from pyspark_recs.workloads.common import artifact_plan, shared_plan
 
 # Protocol version for the checkpointed serving artifacts. Staleness
 # no longer rides on remembering to bump this: artifact paths also
@@ -191,6 +192,118 @@ def _holdout_test_items(spark: SparkSession, sf: str) -> DataFrame:
         _holdout_base(spark, sf)
         .filter(F.col("in_test"))
         .select("user_id", "item_id")
+    )
+
+
+def item_user_features(
+    spark: SparkSession, sf: str, train_inter: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """(item_features, user_features) engineered with the F1–F5
+    operators from the TRAIN interactions + dimension tables.
+
+    Item side (workflow_builder.py:43-58 analog): Categorify(p_brand),
+    Categorify(p_type), Bucketize(p_retailprice, width 100),
+    p_size, and the F5 JoinGroupby popularity → FillMissing(0) →
+    z-score chain. User side (:25-41 analog): Categorify(c_mktsegment)
+    and z-scored c_acctbal. Fit statistics (dictionaries, mu/sigma)
+    come from train-side data only — no leakage from the holdout.
+    """
+    from pyspark_recs.features.categorify import Categorify
+    from pyspark_recs.sql.transforms import bucketize_fixed_width
+
+    part = load_table(spark, sf, "part").select(
+        F.col("p_partkey").alias("item_id"),
+        "p_brand",
+        "p_type",
+        "p_retailprice",
+        F.col("p_size").cast("double").alias("p_size"),
+    )
+    cat_item = Categorify(["p_brand", "p_type"]).fit(part)
+    item = bucketize_fixed_width(
+        cat_item.transform(part), "p_retailprice", 100.0,
+        alias="price_bucket",
+    )
+    pop = train_inter.groupBy("item_id").agg(
+        F.sum("n_purchases").cast("double").alias("item_pop")
+    )
+    item = item.join(F.broadcast(pop), "item_id", "left").withColumn(
+        "item_pop", F.coalesce("item_pop", F.lit(0.0))
+    )
+    stats = item.agg(
+        F.avg("item_pop").alias("mu"),
+        F.stddev_samp("item_pop").alias("sigma"),
+    ).collect()[0]
+    sigma = stats.sigma if stats.sigma else 1.0
+    item = item.select(
+        "item_id",
+        F.col("p_brand_code").alias("brand_code"),
+        F.col("p_type_code").alias("type_code"),
+        F.col("price_bucket").cast("double").alias("price_bucket"),
+        "p_size",
+        ((F.col("item_pop") - F.lit(stats.mu or 0.0)) / F.lit(sigma)).alias(
+            "item_pop_z"
+        ),
+    )
+
+    cust = load_table(spark, sf, "customer").select(
+        F.col("c_custkey").alias("user_id"), "c_mktsegment", "c_acctbal"
+    )
+    cat_user = Categorify(["c_mktsegment"]).fit(cust)
+    ustats = cust.agg(
+        F.avg("c_acctbal").alias("mu"),
+        F.stddev_samp("c_acctbal").alias("sigma"),
+    ).collect()[0]
+    usigma = ustats.sigma if ustats.sigma else 1.0
+    user = cat_user.transform(cust).select(
+        "user_id",
+        F.col("c_mktsegment_code").alias("segment_code"),
+        ((F.col("c_acctbal") - F.lit(ustats.mu or 0.0)) / F.lit(usigma)).alias(
+            "acctbal_z"
+        ),
+    )
+    return item, user
+
+
+def build_content_training_data(
+    spark: SparkSession, sf: str, n_neg_train: int = 5, n_neg_eval: int = 20
+) -> ContentTrainingData:
+    """Assemble the supervised problem from the leave-one-out protocol:
+    positives = TRAIN-split interactions (label 1), negatives =
+    deterministic hash candidates (label 0), features joined from the
+    train-fit feature tables; eval candidates = each user's held-out
+    items ∪ a disjoint negative sample, with the held-out items as
+    truth."""
+    train_inter = _holdout_train_inter(spark, sf)
+    test_items = _holdout_test_items(spark, sf)
+    item_f, user_f = item_user_features(spark, sf, train_inter)
+    n_items_df = load_table(spark, sf, "part").agg(
+        F.max("p_partkey").alias("n_items")
+    )
+
+    pos = train_inter.select("user_id", "item_id", F.lit(1.0).alias("label"))
+    neg = hash_negatives(
+        train_inter, n_items_df, n_neg_train, salt="train"
+    ).select("user_id", "item_id", F.lit(0.0).alias("label"))
+    train = (
+        pos.unionByName(neg)
+        .join(F.broadcast(item_f), "item_id", "left")
+        .join(F.broadcast(user_f), "user_id", "left")
+        .fillna(0.0, subset=list(FEATURE_COLS))
+    )
+
+    eval_neg = hash_negatives(
+        train_inter, n_items_df, n_neg_eval, salt="eval"
+    ).select("user_id", "item_id")
+    cands = (
+        test_items.select("user_id", "item_id")
+        .unionByName(eval_neg)
+        .distinct()
+        .join(F.broadcast(item_f), "item_id", "left")
+        .join(F.broadcast(user_f), "user_id", "left")
+        .fillna(0.0, subset=list(FEATURE_COLS))
+    )
+    return ContentTrainingData(
+        train=train, eval_candidates=cands, truth=test_items
     )
 
 
@@ -1305,7 +1418,6 @@ def rs16_personalized_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     space holds both sides.
     """
     from pyspark_recs.graph import personalized_pagerank
-    from pyspark_recs.workloads.common import snapshot_plan
 
     li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
     orders = load_table(spark, sf, "orders").select("o_orderkey", "o_custkey")
@@ -1324,7 +1436,7 @@ def rs16_personalized_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     # The old form ran the fact join once per union branch and
     # distinct'd at double width; this runs the join once, shuffles
     # half the rows, and the mirror re-reads the snapshot blocks.
-    d = snapshot_plan(ui.distinct())
+    d = ui.distinct().localCheckpoint(eager=True)
     edges = d.unionByName(
         d.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -1590,7 +1702,7 @@ def rs19_bias_baseline(spark: SparkSession, sf: str) -> DataFrame:
 
     Determinism: every mean is an exact fixed-point BIGINT sum divided
     in double, and the subtraction cascade re-quantizes at each stage
-    (see workloads/common.py) — both engines run the identical IEEE
+    (see pyspark_recs/fixedpoint.py) — both engines run the identical IEEE
     expression sequence, so biases match bit-for-bit.
 
     Scale: three combiner-friendly aggregations (global scalar → item →
@@ -2541,7 +2653,6 @@ def rs28_content_model_eval(spark: SparkSession, sf: str) -> DataFrame:
     treeAggregate passes (linear in |train|); eval scores only
     (heldout ∪ 20 negatives) per user — never users × catalog."""
     from pyspark_recs.model.content import (
-        build_content_training_data,
         score_candidates,
         train_content_model,
     )
@@ -2777,7 +2888,6 @@ def _ens_data(spark: SparkSession, sf: str) -> DataFrame:
     ~25-35 s per pass in a default-conf harness session at sf0.01).
     Candidate rows carry ``label`` NULL — the trainers never see
     them (they filter ``split = 'train'``)."""
-    from pyspark_recs.model.content import build_content_training_data
 
     def build() -> DataFrame:
         data = build_content_training_data(spark, sf, n_neg_eval=99)
@@ -2953,12 +3063,11 @@ def rs30_ensemble_eval(spark: SparkSession, sf: str) -> DataFrame:
     # the hit flags and the per-user k check, and Spark has no
     # DataFrame CSE — unsnapshotted, the union+RRF+window pipeline ran
     # once per consumer. eval-users × 10 rows, KB-scale.
-    from pyspark_recs.workloads.common import snapshot_plan
-
-    ens = snapshot_plan(
+    ens = (
         fused.withColumn("frank", F.row_number().over(w_f))
         .filter(F.col("frank") <= 10)
         .select("user_id", "item_id")
+        .localCheckpoint(eager=True)
     )
 
     t = test_items.withColumn("t", F.lit(1))
@@ -3832,10 +3941,7 @@ def rs35_kcore_trace(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _kcore_trace_build(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark_recs.workloads.common import (
-        persisted_ids,
-        release_persisted_ids,
-    )
+    from pyspark_recs.session import persisted_ids, release_persisted_ids
 
     k = 20
     # The distinct (user, item) edge list IS the shared interaction

@@ -25,7 +25,7 @@ from pyspark_recs.sql import (
     top_k_per_group,
 )
 from pyspark_recs.llmops.hashing import md5_long, sql_md5_long
-from pyspark_recs.workloads.common import davg, dsum, sql_davg, sql_dsum
+from pyspark_recs.fixedpoint import davg, dsum, sql_davg, sql_dsum
 
 TRAIN_END = "2000-01-01"
 VALID_END = "2001-01-01"
@@ -580,7 +580,7 @@ def r22_zscore(spark: SparkSession, sf: str) -> DataFrame:
 
     The sum of squares is computed on x/2^12 (exact binary downscale) so
     the decimal cast stays inside the engine-agreement envelope (see
-    workloads/common.py), then rescaled by 2^24."""
+    pyspark_recs/fixedpoint.py), then rescaled by 2^24."""
     orders = load_table(spark, sf, "orders")
     x = F.col("o_totalprice")
     y = x / F.lit(4096.0)
@@ -2003,25 +2003,25 @@ def r55_mad_outliers(spark: SparkSession, sf: str) -> DataFrame:
     are the 100 TB path, exact ranks are the verification harness).
     """
     from pyspark_recs.sql.transforms import grouped_exact_median
-    from pyspark_recs.workloads.common import snapshot_plan
 
     # SNAPSHOT the quantized fact projection (r12-opt, guide §3.3): it
     # feeds SIX plan branches (each median's histogram + in-bucket
     # phases, the deviation build, the final flag aggregate), and the
-    # before plan (plans/r12/r55_mad_outliers_before.txt) shows 9
-    # lineitem scans. The snapshot is a narrow 2-column long projection
-    # (~10 MB at sf0.1; at 100 TB you would materialize to scratch
-    # parquet instead — same plan shape). The deviation frame is NOT
-    # snapshotted: recomputing it from the snapshot is one in-memory
-    # projection + a 3-row broadcast join, cheaper than a second
-    # materialization barrier (A/B'd at sf0.1).
-    li = snapshot_plan(
-        load_table(spark, sf, "lineitem").select(
+    # physical plan without it showed 9 lineitem scans. The snapshot is
+    # a narrow 2-column long projection (~10 MB at sf0.1; at 100 TB you
+    # would materialize to scratch parquet instead — same plan shape).
+    # The deviation frame is NOT snapshotted: recomputing it from the
+    # snapshot is one in-memory projection + a 3-row broadcast join,
+    # cheaper than a second materialization barrier (A/B'd at sf0.1).
+    li = (
+        load_table(spark, sf, "lineitem")
+        .select(
             "l_returnflag",
             F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
             .cast("long")
             .alias("qv"),
         )
+        .localCheckpoint(eager=True)
     )
     # Both medians via the two-phase bucket selection (see
     # grouped_exact_median): no whole-group single-task window sorts.

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from pyspark_recs.io import load_table
 from pyspark_recs.sql import top_k_per_group
-from pyspark_recs.workloads.common import dsum, sql_dsum
+from pyspark_recs.fixedpoint import dsum, sql_dsum
 
 SESSION_GAP_US = 1800 * 1_000_000  # 30 min
 

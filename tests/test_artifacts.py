@@ -104,7 +104,7 @@ def test_code_fingerprint_moves_on_source_edit(tmp_path):
 
 def test_code_fingerprint_covers_whole_package():
     """The ADVICE gap: builders also lean on llmops/hashing.py,
-    io/loaders.py and workloads/common.py — an edit there changes
+    io/loaders.py and fixedpoint.py — an edit there changes
     artifact CONTENTS, so it must also move the PATH. The glob set
     must resolve to every .py in the package, keyed by relpath (two
     __init__.py files must not alias)."""
@@ -119,6 +119,7 @@ def test_code_fingerprint_covers_whole_package():
     for must in (
         "llmops/hashing.py",
         "io/loaders.py",
+        "fixedpoint.py",
         "workloads/common.py",
         "workloads/llmops.py",
         "workloads/recsys.py",

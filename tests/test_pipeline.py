@@ -16,10 +16,8 @@ from pyspark_recs.io.sinks import (
     predictions_table,
 )
 from pyspark_recs.pipeline import FlowConfig, run_flow, validate_config
-from pyspark_recs.workloads.common import (
-    persistent_rdd_snapshot,
-    unpersist_shared,
-)
+from pyspark_recs.session import persistent_rdd_snapshot
+from pyspark_recs.workloads.common import unpersist_shared
 
 
 def test_validate_config_fail_fast():
@@ -72,6 +70,40 @@ def test_run_flow_end_to_end(
     unpersist_shared(spark)
     assert persistent_rdd_snapshot(spark) == []
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize(
+    "training_end, validation_end, window",
+    [
+        # no transaction falls on 2020-09-08
+        ("2020-09-08", "2020-09-09", r"validation window \[2020-09-08, 2020-09-09\)"),
+        # no transaction falls on or after 2020-09-30
+        ("2020-09-08", "2020-09-30", r"test window \(from 2020-09-30 on\)"),
+    ],
+    ids=["validation", "test"],
+)
+def test_run_flow_rejects_an_empty_window(
+    spark, raw_articles, raw_customers, raw_transactions, raw_images,
+    tmp_path, training_end, validation_end, window,
+):
+    # An empty evaluation window used to give all-zero metrics (the
+    # grid's argmax then fell back to grid order) or an export with
+    # no rows, and no error.
+    cfg = FlowConfig(
+        training_end_date=training_end,
+        validation_end_date=validation_end,
+        min_purchases=4,
+        top_k=3,
+        param_grid=[{"rank": 4, "max_iter": 5}],
+    )
+    export = tmp_path / "kv"
+    with pytest.raises(ValueError, match=window):
+        run_flow(
+            spark, raw_articles, raw_customers, raw_transactions, raw_images,
+            cfg, export_path=str(export),
+        )
+    assert not export.exists()
+    unpersist_shared(spark)
 
 
 def test_predictions_table_shape_and_order(spark):

@@ -797,11 +797,11 @@ def test_cache_lint_flags_an_unregistered_persist(spark):
     # teardown must free it with no registration — both a plain
     # .persist() and an eager localCheckpoint, the RDD-level storage
     # DataFrame.unpersist cannot reach.
-    from pyspark_recs.workloads.common import (
+    from pyspark_recs.session import (
         persistent_rdd_snapshot,
         release_all_persistent,
-        unpersist_shared,
     )
+    from pyspark_recs.workloads.common import unpersist_shared
 
     release_all_persistent(spark)
     unpersist_shared(spark)
@@ -825,13 +825,13 @@ def test_cache_teardown_previous_leakers_now_clean(spark):
     # caches, heavy-hitters' and rare-token's exploded-token caches,
     # k-core's per-round localCheckpoints) must run, tear down via
     # unpersist_shared, and leave ZERO persisted RDDs. The full-width
-    # sweep lives in tools/cache_lint.py (run per round, log
-    # committed); this pins the fixed sites under pytest.
-    from pyspark_recs.workloads.common import (
+    # sweep lives in tools/cache_lint.py (run per round); this pins
+    # the fixed sites under pytest.
+    from pyspark_recs.session import (
         persistent_rdd_snapshot,
         release_all_persistent,
-        unpersist_shared,
     )
+    from pyspark_recs.workloads.common import unpersist_shared
 
     release_all_persistent(spark)
     unpersist_shared(spark)
@@ -879,37 +879,3 @@ def test_l95_url_dedup_is_single_shuffle_pure_jvm(spark):
     assert len(re.findall(r"^\(\d+\) HashAggregate", plan, re.M)) == 2
     assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1
     assert "EvalPython" not in plan
-
-
-def test_snapshot_plan_parquet_mode(spark, monkeypatch, tmp_path):
-    # $SPARK_GRAFT_SNAPSHOT=parquet routes EVERY snapshot through a
-    # scratch-parquet write + read-back (the cluster-scale,
-    # executor-loss-safe variant) instead of localCheckpoint blocks:
-    # rows identical, the read-back plan is a plain parquet scan, and
-    # no persisted RDDs are registered (nothing for teardown to leak).
-    from pyspark_recs.workloads import common as C
-
-    base = spark.range(100).selectExpr("id", "id * 2 AS v")
-    expected = sorted(tuple(r) for r in base.collect())
-
-    monkeypatch.setenv("SPARK_GRAFT_SNAPSHOT", "parquet")
-    monkeypatch.setenv("SPARK_GRAFT_SNAPSHOT_DIR", str(tmp_path))
-    monkeypatch.setattr(C, "_SNAPSHOT_SCRATCH", [])
-    before_ids = C.persisted_ids(spark)
-    snap = C.snapshot_plan(base)
-    assert sorted(tuple(r) for r in snap.collect()) == expected
-    assert "parquet" in plan_of(snap, "simple").lower()
-    assert C.persisted_ids(spark) == before_ids
-    # the scratch root lives under the override dir
-    assert C._SNAPSHOT_SCRATCH and C._SNAPSHOT_SCRATCH[0].startswith(
-        str(tmp_path)
-    )
-
-    # default mode unchanged: localCheckpoint blocks, freed at teardown
-    monkeypatch.delenv("SPARK_GRAFT_SNAPSHOT")
-    snap2 = C.snapshot_plan(base)
-    assert sorted(tuple(r) for r in snap2.collect()) == expected
-    created = C.persisted_ids(spark) - before_ids
-    assert created
-    C.unpersist_shared(spark)
-    assert C.persisted_ids(spark) == before_ids

@@ -298,7 +298,7 @@ def test_incremental_rollup_matches_full_recompute(spark):
         r01_pricing_summary,  # noqa: F401  (same table, sanity anchor)
     )
     from pyspark_recs.io import load_table
-    from pyspark_recs.workloads.common import dsum
+    from pyspark_recs.fixedpoint import dsum
 
     sf = "/root/testdata/sf0.001"
     got = {

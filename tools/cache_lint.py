@@ -33,11 +33,11 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    from pyspark_recs.workloads.common import (
+    from pyspark_recs.session import (
         persistent_rdd_snapshot,
         release_all_persistent,
-        unpersist_shared,
     )
+    from pyspark_recs.workloads.common import unpersist_shared
 
     spark = (
         SparkSession.builder.master(

@@ -75,11 +75,11 @@ def main() -> int:
 
         # ---- rs28: content LR AUC + recall@10 ------------------------
         from pyspark_recs.model.content import (
-            build_content_training_data,
             score_candidates,
             train_content_model,
         )
         from pyspark_recs.model.metrics import ranking_metrics
+        from pyspark_recs.workloads.recsys import build_content_training_data
 
         data = build_content_training_data(spark, sf)
         assembler, cmodel = train_content_model(data.train, max_iter=10)
